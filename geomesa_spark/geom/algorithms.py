@@ -668,10 +668,6 @@ def _area_exceeds(a: Geometry, b: Geometry) -> bool:
     return area(a) > area(b) + 1e-12
 
 
-def _contains_strict(a, b) -> bool:
-    return False
-
-
 _PRED_PATTERNS = {
     "equals": "T*F**FFF*",
     "disjoint": "FF*FF****",

@@ -29,10 +29,6 @@ _LE_POINT_HEADER = b"\x01\x01\x00\x00\x00"  # little-endian, type=1
 POINT_WKB_SIZE = 21
 
 
-def point_wkb(x: float, y: float) -> bytes:
-    return _LE_POINT_HEADER + struct.pack("<dd", x, y)
-
-
 def points_to_wkb(xs: np.ndarray, ys: np.ndarray) -> list[bytes]:
     """Vectorized encode of n points to a list of WKB buffers."""
     n = len(xs)

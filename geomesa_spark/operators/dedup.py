@@ -9,10 +9,11 @@ never a cross join or an all-pairs-within-block join — so the plan scales
 with duplicate density, not n^2.
 
 Scale notes (the three round-1 anti-patterns, fixed):
-- candidate pairs carry IDS ONLY through the bucket shuffle; signatures /
-  shingles / vectors are re-attached with plain (sort-merge or AQE-broadcast)
-  id joins — nothing document-sized is broadcast and nothing is persisted
-  (identical subtrees dedupe via Spark's ReusedExchange).
+- candidate pairs carry IDS ONLY through the bucket shuffle; the verify
+  kernels read signatures / texts from a broadcast per-document table under
+  spark.geomesa.dedup.gatherMaxBytes, or from plain id joins above it (see
+  the verify layer), and nothing is persisted (identical subtrees dedupe
+  via Spark's ReusedExchange).
 - n-gram Jaccard generates candidates with MinHash banding (miss probability
   (1-t^r)^b) and runs the exact Jaccard only on candidates. Default (r=8,
   b=16): selective enough that a self-similar corpus (mass of pairs at
@@ -83,8 +84,8 @@ def shingles_col(text_col, k: int = 3):
     """Distinct lowercase character k-shingles as a Column. NOTE: transform/
     substring lambdas are INTERPRETED per element by Spark — this is the
     SQL-mirrorable definition; the dedup hot paths shingle inside Arrow
-    batches instead (_minhash_text_udf / _exact_jaccard_udf compute the
-    identical distinct-k-gram sets in numpy/Python per batch)."""
+    batches instead (_minhash_text_udf / _jaccard compute the identical
+    distinct-k-gram sets in numpy/Python per batch)."""
     t = F.lower(text_col)
     return F.array_distinct(
         F.transform(
@@ -104,9 +105,11 @@ def _shingle_set(t: str, k: int) -> set:
 
 def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
     """text -> minhash signature with the shingling INSIDE the Arrow batch
-    (one Python pass per doc) — same hash family and same S8-packing as
-    _minhash_udf, so signatures are bit-identical to the Column-shingled
-    path, minus ~len(text) interpreted lambda evals per row."""
+    (one Python pass per doc; the grams are shingles_col's, without its
+    ~len(text) interpreted lambda evals per row). Each gram's first 8 UTF-8
+    bytes pack into a uint64 folded to 31 bits; the hash family is
+    h_i(x) = (a_i*x + b_i) mod (2^31-1) with a,b,x < 2^31, so products stay
+    inside uint64 — no object math."""
     rng = np.random.default_rng(seed)
     P = np.uint64((1 << 31) - 1)
     A = rng.integers(1, int(P), num_hashes, dtype=np.uint64)
@@ -136,8 +139,9 @@ def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
 
         def flush():
             if gram_ix:
+                # each gram's first 8 UTF-8 bytes (S8 alone only takes ASCII)
                 packed = np.frombuffer(
-                    np.asarray(list(gram_ix.keys()), dtype="S8").tobytes(),
+                    np.asarray([g.encode() for g in gram_ix], dtype="S8").tobytes(),
                     dtype=np.uint64,
                 )
                 x = ((packed >> np.uint64(31)) ^ packed) & P
@@ -172,64 +176,6 @@ def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
     return F.pandas_udf(mh, ArrayType(LongType()))
 
 
-def _exact_jaccard_udf(k: int = 3):
-    """(text_a, text_b) -> EXACT distinct-k-shingle Jaccard, one batch pass.
-    Identical math to size(array_intersect)/size(array_union) over
-    shingles_col arrays, but pairs carry ~300-byte strings through the
-    attach joins instead of ~300-element string arrays, and the set ops run
-    in Python per batch instead of interpreted per element."""
-    from pyspark.sql.types import DoubleType
-
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        # candidate pairs share documents (one doc pairs with many), so
-        # memoize the shingle set per distinct text within the batch
-        cache: dict = {}
-
-        def sh(t):
-            s = cache.get(t)
-            if s is None:
-                s = _shingle_set(t, k)
-                if len(cache) < 65536:
-                    cache[t] = s
-            return s
-
-        out = np.full(len(a), np.nan)
-        av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-        for i in range(len(av)):
-            ta, tb = av[i], bv[i]
-            if ta is None or tb is None:
-                continue
-            sa, sb = sh(ta), sh(tb)
-            out[i] = len(sa & sb) / len(sa | sb)
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
-
-
-def _sig_match_frac_udf(num_hashes: int):
-    """(sig_a, sig_b) -> matching-position fraction (the minhash Jaccard
-    estimator), one numpy pass per batch — replaces the per-pair interpreted
-    zip_with/aggregate over 128-element arrays in the candidate prefilter."""
-    from pyspark.sql.types import DoubleType
-
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.full(len(a), np.nan)
-        ok = [
-            i
-            for i in range(len(a))
-            if a.iloc[i] is not None and b.iloc[i] is not None
-        ]
-        if ok:
-            A = np.stack([np.asarray(a.iloc[i], dtype=np.int64) for i in ok])
-            Bm = np.stack([np.asarray(b.iloc[i], dtype=np.int64) for i in ok])
-            out[ok] = (A == Bm).mean(axis=1)
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
-
-
 def _pack_sig_udf():
     """array<long> minhash signature -> little-endian int32 binary blob.
     Signature values are < 2^31 (hashes mod P = 2^31-1), so int32 is exact.
@@ -249,35 +195,6 @@ def _pack_sig_udf():
         )
 
     return F.pandas_udf(f, BinaryType())
-
-
-def _sig_match_frac_bin_udf(num_hashes: int):
-    """Binary-blob variant of _sig_match_frac_udf: (sigb_a, sigb_b) ->
-    matching-position fraction. One zero-copy frombuffer over the whole
-    batch instead of 2 x batch-size np.asarray(list) conversions — VALUE-
-    IDENTICAL to the array form (same ints compared for equality)."""
-    from pyspark.sql.types import DoubleType
-
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = a.to_numpy(dtype=object)
-        bv = b.to_numpy(dtype=object)
-        ok = np.array(
-            [x is not None and y is not None for x, y in zip(av, bv)],
-            dtype=bool,
-        )
-        out = np.full(len(av), np.nan)
-        if ok.any():
-            A = np.frombuffer(b"".join(av[ok]), dtype="<i4").reshape(
-                -1, num_hashes
-            )
-            Bm = np.frombuffer(b"".join(bv[ok]), dtype="<i4").reshape(
-                -1, num_hashes
-            )
-            out[ok] = (A == Bm).mean(axis=1)
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -474,6 +391,15 @@ def dedup_components_star(
     ).select("id", F.coalesce(F.col("_c"), F.col("id")).alias("component"))
 
 
+# driver bytes per edge of dedup_components' local union-find: the Arrow-
+# collected frame, the id lists, the parent/component dicts and the output
+# tuples. Measured as the tracemalloc peak on 9-char string ids (CPython
+# 3.11, pandas 2.2, x86-64): 376 B/edge when every edge brings two new
+# nodes (disjoint pairs, the worst case), 234 B/edge on a chain; Arrow's
+# own buffers (~26 B/edge) come on top. Rounded up.
+_UF_EDGE_BYTES = 400
+
+
 def dedup_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -492,8 +418,8 @@ def dedup_components(
     on id; labels are localCheckpoint'd so lineage stays flat.
 
     r9: when the edge list fits the gather cap (spark.geomesa.dedup.
-    gatherMaxBytes / 64 edges — the same size-guarded posture as the
-    verify gather), the components are solved with a driver-side
+    gatherMaxBytes / _UF_EDGE_BYTES edges — the same size-guarded posture
+    as the verify gather), the components are solved with a driver-side
     union-find instead: the distributed loop costs one join + aggregate +
     probe JOB per round, which is pure scheduling latency on a graph that
     fits in memory (measured sf1.0: 52,873 edges took ~5 s of rounds vs
@@ -503,8 +429,8 @@ def dedup_components(
     E0 = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     E0 = E0.localCheckpoint(eager=False)
     n_edges = E0.count()
-    if n_edges <= _gather_cap_bytes(pairs.sparkSession) // 64:
-        rows = E0.collect()
+    if n_edges <= _gather_cap_bytes(pairs.sparkSession) // _UF_EDGE_BYTES:
+        pdf = _collect_to_pandas(E0)
         parent: dict = {}
 
         def find(x):
@@ -515,8 +441,7 @@ def dedup_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in rows:
-            u, v = row[0], row[1]
+        for u, v in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
             if u not in parent:
                 parent[u] = u
             if v not in parent:
@@ -630,39 +555,6 @@ def _bucket_guard(keyed: DataFrame, key_cols: list[str], max_bucket: int | None)
 # ------------------------------------------------------------------ MinHash
 
 
-def _minhash_udf(num_hashes: int, seed: int = 42):
-    """shingle array -> minhash signature, fully vectorized numpy.
-
-    Shingles (short strings) pack directly into uint64 words via a fixed-width
-    bytes view; the hash family is h_i(x) = (a_i*x + b_i) mod (2^31-1) with
-    a,b,x < 2^31 so products stay inside uint64 — no object math, one matrix
-    op per document."""
-    rng = np.random.default_rng(seed)
-    P = np.uint64((1 << 31) - 1)
-    A = rng.integers(1, int(P), num_hashes, dtype=np.uint64)
-    B = rng.integers(0, int(P), num_hashes, dtype=np.uint64)
-
-    def mh(shingles: pd.Series) -> pd.Series:
-        # per-document tiles (num_hashes x ~300) stay inside L2 cache; a
-        # whole-batch flattened matrix is ~30x SLOWER (GB-sized uint64
-        # temporaries are memory-bandwidth bound) — measured, keep the loop
-        out = []
-        for arr in shingles:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            # pack each shingle's first 8 utf-8 bytes into a uint64
-            packed = np.frombuffer(
-                np.asarray(arr, dtype="S8").tobytes(), dtype=np.uint64
-            )
-            x = ((packed >> np.uint64(31)) ^ packed) & P  # fold to 31 bits
-            sig = ((A[:, None] * x[None, :] + B[:, None]) % P).min(axis=1)
-            out.append(sig.astype(np.int64).tolist())
-        return pd.Series(out, dtype=object)
-
-    return F.pandas_udf(mh, ArrayType(LongType()))
-
-
 def _lsh_candidates(
     sig: DataFrame,
     id_col: str,
@@ -743,22 +635,25 @@ def _attach(cand: DataFrame, side: DataFrame, id_col: str, out_id: str) -> DataF
 # recall of true >=threshold pairs is preserved (tested at both SFs).
 _EST_MARGIN = 0.15
 
-# -------------------------------------------------- gather-side verification
+# ----------------------------------------------------------- verify layer
 #
-# The r8 verify pipeline attached per-document payloads (512 B sig blobs,
-# ~260 B texts) to every candidate PAIR with sort-merge id joins. At sf1.0
-# that is 72 M pairs x ~1 KB through two exchanges for the est stage alone
-# (measured r9: est 15.3 s, exact verify 28.9 s of an 87 s gate) — the
-# classic "shuffle heavy payloads to make a per-pair decision" anti-pattern
-# (optimization guide §8). The fix is the guide's "broadcast the plan"
-# option: when the per-document side fits a size cap, collect it ONCE,
-# broadcast it, and let the verify UDFs gather payloads by id — candidate
-# pairs then carry IDS ONLY end to end, and all four attach exchanges
-# disappear. The math inside is bit-identical (same int32 equality mean,
-# same shingle-set Jaccard). Above the cap (the 100 TB case: the document
-# table itself is too big to hold per executor) the attach-join path is
-# unchanged — this is deliberate join-strategy selection (guide §3.1), not
-# a scale regression.
+# One numpy kernel per similarity measure (_match_frac: the MinHash
+# estimate; _jaccard: exact shingle Jaccard), each fed by two thin adapters
+# that only turn a UDF's input Series into the kernel's arrays:
+# - GATHER (the default): the per-document table (int32 sigs / texts) is
+#   collected ONCE under a size cap, broadcast, and rows are gathered by
+#   candidate id — pairs carry IDS ONLY end to end, with no attach
+#   exchanges. The r8 plan attached 512 B sig blobs and ~260 B texts to
+#   every PAIR (sf1.0: 72 M pairs x ~1 KB through two exchanges for the est
+#   stage alone; measured r9: est 15.3 s, exact verify 28.9 s of an 87 s
+#   gate) — the "shuffle heavy payloads to make a per-pair decision"
+#   anti-pattern (optimization guide §8).
+# - ATTACH (above the cap — the 100 TB case, where the document table is
+#   too big to hold per executor): the payload column is joined onto both
+#   sides of each pair with plain id joins. Deliberate join-strategy
+#   selection (guide §3.1), not a scale regression.
+# Both adapters call the same kernel, so both paths emit bit-identical
+# values.
 _GATHER_MAX_BYTES = 256 << 20
 
 
@@ -786,39 +681,22 @@ def _collect_to_pandas(df: DataFrame) -> pd.DataFrame:
             spark.conf.set(key, old)
 
 
-def _collect_sig_table(sig: DataFrame, id_col: str, num_hashes: int):
-    """(ids Index, int32 sig matrix) broadcast when the per-doc sig table
-    fits the gather cap, else None (callers fall back to attach joins)."""
-    spark = sig.sparkSession
-    n = sig.count()
-    if n == 0 or n * 4 * num_hashes > _gather_cap_bytes(spark):
+def _gather_table(df: DataFrame, id_col: str, col: str, decode):
+    """Broadcast (ids Index, decode(payload Series)) of a per-document table
+    when it fits the gather cap, else None (callers fall back to attach
+    joins). One aggregation job sizes it in real bytes — octet_length, so
+    non-ASCII text counts every UTF-8 byte — plus 64 B/row for the id and
+    object headers. Duplicate ids are refused: gathering by id cannot
+    reproduce the attach join's one-row-per-match semantics."""
+    spark = df.sparkSession
+    n, b = df.agg(F.count(F.lit(1)), F.sum(F.octet_length(col))).first()
+    if not n or n * 64 + (b or 0) > _gather_cap_bytes(spark):
         return None
-    pdf = _collect_to_pandas(sig.select(id_col, "_sigb"))
-    ids = pd.Index(pdf[id_col])
-    if ids.has_duplicates:
-        return None  # attach-join semantics needed for duplicate ids
-    M = np.frombuffer(b"".join(bytes(v) for v in pdf["_sigb"]), dtype="<i4").reshape(
-        len(pdf), num_hashes
-    )
-    return spark.sparkContext.broadcast((ids, M))
-
-
-def _collect_text_table(txt: DataFrame, id_col: str, text_col: str = "_txt"):
-    """(ids Index, object array of texts) broadcast when the text table fits
-    the gather cap, else None."""
-    spark = txt.sparkSession
-    stats = txt.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.length(text_col)).alias("b")
-    ).first()
-    n, b = stats["n"] or 0, stats["b"] or 0
-    if n == 0 or n * 64 + b > _gather_cap_bytes(spark):
-        return None
-    pdf = _collect_to_pandas(txt.select(id_col, text_col))
+    pdf = _collect_to_pandas(df.select(id_col, col))
     ids = pd.Index(pdf[id_col])
     if ids.has_duplicates:
         return None
-    texts = pdf[text_col].to_numpy(dtype=object)
-    return spark.sparkContext.broadcast((ids, texts))
+    return spark.sparkContext.broadcast((ids, decode(pdf[col])))
 
 
 def _gather_ix(ids: pd.Index, s: pd.Series) -> np.ndarray:
@@ -828,82 +706,122 @@ def _gather_ix(ids: pd.Index, s: pd.Series) -> np.ndarray:
     return ix
 
 
-def _est_match_frac_gather_udf(bc, num_hashes: int):
-    """(id_a, id_b) -> minhash matching-position fraction, gathering rows of
-    the broadcast sig matrix — VALUE-IDENTICAL to _sig_match_frac_bin_udf on
-    attached blobs (same int32 values, same equality mean)."""
+def _pair_inputs(cand: DataFrame, table: DataFrame, id_col: str, col: str, bc):
+    """(cand, kernel-input columns): the pair ids themselves when the
+    document table was gathered (bc), else `col` attached to both sides
+    (null payloads dropped: their pairs could never pass a threshold)."""
+    if bc is not None:
+        return cand, (F.col("id_a"), F.col("id_b"))
+    side = table.select(id_col, col).filter(F.col(col).isNotNull())
+    cand = _attach(_attach(cand, side, id_col, "id_a"), side, id_col, "id_b")
+    return cand, (F.col(f"{col}_id_a"), F.col(f"{col}_id_b"))
+
+
+def _sig_matrix(blobs, num_hashes: int) -> np.ndarray:
+    """Packed int32 signature blobs (_pack_sig_udf) -> (n, num_hashes)
+    matrix: one zero-copy frombuffer over the joined bytes."""
+    return np.frombuffer(b"".join(blobs), dtype="<i4").reshape(-1, num_hashes)
+
+
+def _match_frac(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """MinHash Jaccard estimate per pair: the fraction of equal positions
+    of two (pairs x num_hashes) int32 signature matrices."""
+    return (A == B).mean(axis=1)
+
+
+def _jaccard(ia, ib, texts, k: int, vocab: dict, cache: dict) -> np.ndarray:
+    """EXACT distinct-k-shingle Jaccard of the pairs (texts[ia[r]],
+    texts[ib[r]]). Each text's gram set is materialized once per `cache` as
+    a SORTED array of integer gram ids from `vocab` — an exact string->id
+    bijection, so intersection/union COUNTS equal _shingle_set set math and
+    the quotient is bit-identical (~1 KB per text vs ~18 KB for a string
+    set). Pairs intersect by searchsorted over the sorted id arrays —
+    measured 2.5x faster per pair than np.intersect1d and ~7x than fresh
+    set building."""
+
+    def grams(ix):
+        s = cache.get(ix)
+        if s is None:
+            g = _shingle_set(texts[ix], k)
+            s = np.fromiter(
+                (vocab.setdefault(x, len(vocab)) for x in g),
+                dtype=np.int64,
+                count=len(g),
+            )
+            s.sort()
+            cache[ix] = s
+        return s
+
+    n = len(ia)
+    out = np.empty(n, dtype=np.float64)
+    # run grouping: consecutive rows with the same partner (the gather
+    # caller sorts each partition by id_b) share the array sb — concatenate
+    # the run's sa arrays and do ONE searchsorted + reduceat per run instead
+    # of one numpy call chain per pair (measured ~23us/pair ungrouped)
+    i = 0
+    while i < n:
+        j = i + 1
+        part = ib[i]
+        while j < n and ib[j] == part:
+            j += 1
+        sb = grams(part)
+        sizes = np.empty(j - i, dtype=np.int64)
+        cats = []
+        for r in range(i, j):
+            sa = grams(ia[r])
+            sizes[r - i] = sa.size
+            cats.append(sa)
+        cat = np.concatenate(cats) if len(cats) > 1 else cats[0]
+        hits = (
+            np.searchsorted(sb, cat, side="right")
+            - np.searchsorted(sb, cat, side="left")
+        )
+        bounds = np.zeros(len(sizes), dtype=np.int64)
+        np.cumsum(sizes[:-1], out=bounds[1:])
+        inter = np.add.reduceat(hits, bounds)
+        out[i:j] = inter / (sizes + sb.size - inter)
+        i = j
+    return out
+
+
+def _est_udf(num_hashes: int, bc=None):
+    """Pair -> _match_frac. Gather adapter (bc = broadcast (ids, sig
+    matrix)): (id_a, id_b) pick matrix rows. Attach adapter (bc None):
+    (sigb_a, sigb_b) are the joined-in blobs."""
     from pyspark.sql.types import DoubleType
 
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        ids, M = bc.value
-        return pd.Series((M[_gather_ix(ids, a)] == M[_gather_ix(ids, b)]).mean(axis=1))
+        if bc is None:
+            A, B = _sig_matrix(a, num_hashes), _sig_matrix(b, num_hashes)
+        else:
+            ids, M = bc.value
+            A, B = M[_gather_ix(ids, a)], M[_gather_ix(ids, b)]
+        return pd.Series(_match_frac(A, B))
 
     return F.pandas_udf(f, DoubleType())
 
 
-def _exact_jaccard_gather_udf(bc, k: int):
-    """(id_a, id_b) -> EXACT distinct-k-shingle Jaccard, texts gathered from
-    the broadcast table. Each text's distinct-gram set is materialized ONCE
-    per worker as a SORTED array of integer gram ids from a per-worker vocab
-    dict (exact string->id bijection, so intersection/union COUNTS are
-    identical to _exact_jaccard_udf's Python set math and the quotient is
-    bit-identical; ~1 KB per text vs ~18 KB for string sets). Pairs
-    intersect by searchsorted over the sorted id arrays — measured 2.5x
-    faster per pair than np.intersect1d and ~7x than fresh set building."""
+def _jaccard_udf(k: int, bc=None):
+    """Pair -> _jaccard. Gather adapter (bc = broadcast (ids, texts)):
+    (id_a, id_b) index the table and the gram arrays are memoized per
+    worker. Attach adapter (bc None): (txt_a, txt_b) are the joined-in
+    texts, keyed per batch, so the memo is bounded by the batch."""
     from pyspark.sql.types import DoubleType
 
     vocab: dict = {}
     cache: dict = {}
 
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
+        if bc is None:
+            # a dict, not pd.factorize: pandas' string hashing stops at NUL
+            keys: dict = {}
+            ab = pd.concat([a, b])
+            codes = np.array([keys.setdefault(t, len(keys)) for t in ab])
+            n = len(a)
+            return pd.Series(_jaccard(codes[:n], codes[n:], list(keys), k, {}, {}))
         ids, texts = bc.value
-
-        def sh(ix: int):
-            s = cache.get(ix)
-            if s is None:
-                grams = _shingle_set(texts[ix], k)
-                s = np.fromiter(
-                    (vocab.setdefault(g, len(vocab)) for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                s.sort()
-                cache[ix] = s
-            return s
-
-        ia = _gather_ix(ids, a)
-        ib = _gather_ix(ids, b)
-        n = len(ia)
-        out = np.empty(n, dtype=np.float64)
-        # batch-level grouping: pairs arrive clustered by id_b (the verify
-        # caller sorts within partitions), so consecutive rows share the
-        # partner array sb — concatenate the run's sa arrays and do ONE
-        # searchsorted + reduceat per run instead of one numpy call chain
-        # per pair (measured ~23us/pair ungrouped, numpy call overhead)
-        i = 0
-        while i < n:
-            j = i + 1
-            part = ib[i]
-            while j < n and ib[j] == part:
-                j += 1
-            sb = sh(part)
-            sizes = np.empty(j - i, dtype=np.int64)
-            cats = []
-            for r in range(i, j):
-                sa = sh(ia[r])
-                sizes[r - i] = sa.size
-                cats.append(sa)
-            cat = np.concatenate(cats) if len(cats) > 1 else cats[0]
-            hits = (
-                np.searchsorted(sb, cat, side="right")
-                - np.searchsorted(sb, cat, side="left")
-            )
-            bounds = np.zeros(len(sizes), dtype=np.int64)
-            np.cumsum(sizes[:-1], out=bounds[1:])
-            inter = np.add.reduceat(hits, bounds)
-            out[i:j] = inter / (sizes + sb.size - inter)
-            i = j
-        return pd.Series(out)
+        ia, ib = _gather_ix(ids, a), _gather_ix(ids, b)
+        return pd.Series(_jaccard(ia, ib, texts, k, vocab, cache))
 
     return F.pandas_udf(f, DoubleType())
 
@@ -916,27 +834,18 @@ def _exact_verify(
     threshold: float,
 ) -> DataFrame:
     """Exact shingle-Jaccard verification of id-only candidate pairs ->
-    (id_a, id_b, jaccard >= threshold). Gather path when the text table fits
-    the cap (pairs never carry texts); attach-join path otherwise."""
-    bc = _collect_text_table(txt, id_col)
+    (id_a, id_b, jaccard >= threshold)."""
+    bc = _gather_table(txt, id_col, "_txt", lambda s: s.to_numpy(dtype=object))
     if bc is not None:
         # local sort clusters each partition's pairs by partner id so the
-        # gather kernel's run-grouping amortizes (row order is not part of
-        # the result contract; the pair SET is unchanged)
+        # kernel's run grouping amortizes (row order is not part of the
+        # result contract; the pair SET is unchanged)
         cand = cand.sortWithinPartitions("id_b")
-        # asNondeterministic: the filter on the projected alias would
-        # otherwise be pushed below the projection and evaluate the UDF
-        # twice per row (guide §4.4)
-        jac = _exact_jaccard_gather_udf(bc, k).asNondeterministic()(
-            F.col("id_a"), F.col("id_b")
-        )
-        return cand.select("id_a", "id_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
-    slim = txt.select(id_col, "_txt")
-    cand = _attach(cand, slim, id_col, "id_a")
-    cand = _attach(cand, slim, id_col, "id_b")
-    jac = _exact_jaccard_udf(k)(F.col("_txt_id_a"), F.col("_txt_id_b"))
+    cand, args = _pair_inputs(cand, txt, id_col, "_txt", bc)
+    # asNondeterministic: the filter on the projected alias would otherwise
+    # be pushed below the projection and evaluate the UDF twice per row
+    # (guide §4.4)
+    jac = _jaccard_udf(k, bc).asNondeterministic()(*args)
     return cand.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
@@ -949,45 +858,93 @@ def _est_prefilter(
     threshold: float,
     num_hashes: int,
     cand_raw: bool = False,
+    keep_est: bool = False,
 ) -> DataFrame:
-    """Sig-only prefilter BEFORE any text movement. Two-phase on purpose: a
-    fused single attach (sig+txt per side) was tried (r7) and measured 2.5x
-    SLOWER on the minhash gate (scripts/bisect_attach.py). r9: when the
-    per-doc sig table fits the gather cap the estimate runs on ID-ONLY pairs
-    against the broadcast sig matrix (no attach joins at all — at sf1.0 the
-    two sig attaches alone shuffled ~72 M pairs x 1 KB); the attach path
-    remains the above-cap fallback.
+    """The MinHash-estimate filter, sig-only, BEFORE any text moves. As the
+    exact-verify prefilter (keep_est=False) it keeps (id_a, id_b) with
+    est >= threshold - _EST_MARGIN; as verify='est''s final filter
+    (keep_est=True) it keeps (id_a, id_b, est_jaccard) with est >=
+    threshold. Two-phase on purpose: fusing the text attach into this
+    stage measured 2.5x SLOWER on the minhash gate (BENCH.md round 7:
+    14.6 s fused vs 5.9 s) — a pandas-UDF filter stage materializes whole
+    rows through Arrow.
 
     cand_raw=True marks a NON-deduplicated multi-band pair stream
     (_lsh_candidates dedup=False): the estimate is per-pair deterministic,
     so filtering the copies first and deduplicating the survivors is
     set-identical to dedupe-then-filter, and moves the dedupe exchange from
-    the full candidate volume to the survivors."""
-    bc = _collect_sig_table(sig, id_col, num_hashes)
-    if bc is not None:
-        # asNondeterministic pins the est filter where it stands — a
-        # deterministic UDF predicate could be re-ordered around the
-        # upstream dedupe/join by the optimizer
-        est = _est_match_frac_gather_udf(bc, num_hashes).asNondeterministic()(
-            F.col("id_a"), F.col("id_b")
-        )
-        out = cand.filter(est >= threshold - _EST_MARGIN).select("id_a", "id_b")
-        if cand_raw:
-            # partition the dedupe by id_b alone: a subset of the dedupe key
-            # still co-locates every copy of a pair (same exchange count),
-            # and it clusters each partition by PARTNER so the exact-verify
-            # kernel's run-grouping amortizes over ~hundreds of pairs
-            out = out.repartition("id_b").dropDuplicates(["id_a", "id_b"])
-        return out
-    if cand_raw:
+    the full candidate volume to the survivors (gather path only)."""
+    bc = _gather_table(sig, id_col, "_sigb", lambda s: _sig_matrix(s, num_hashes))
+    if bc is None and cand_raw:
         cand = cand.dropDuplicates(["id_a", "id_b"])
-    sigs = sig.select(id_col, "_sigb")
-    pre = _attach(cand, sigs, id_col, "id_a")
-    pre = _attach(pre, sigs, id_col, "id_b")
-    est = _sig_match_frac_bin_udf(num_hashes)(
-        F.col("_sigb_id_a"), F.col("_sigb_id_b")
+    cand, args = _pair_inputs(cand, sig, id_col, "_sigb", bc)
+    # asNondeterministic pins the est filter where it stands — a
+    # deterministic UDF predicate could be re-ordered around the upstream
+    # dedupe/join by the optimizer
+    est = _est_udf(num_hashes, bc).asNondeterministic()(*args)
+    min_est = threshold if keep_est else threshold - _EST_MARGIN
+    out = cand.select("id_a", "id_b", est.alias("est_jaccard")).filter(
+        F.col("est_jaccard") >= min_est
     )
-    return pre.filter(est >= threshold - _EST_MARGIN).select("id_a", "id_b")
+    if not keep_est:
+        out = out.select("id_a", "id_b")
+    if bc is not None and cand_raw:
+        # the prefilter partitions its dedupe by id_b alone: a subset of the
+        # dedupe key still co-locates every copy of a pair (same exchange
+        # count), and it clusters each partition by PARTNER so the exact
+        # verify kernel's run grouping amortizes over ~hundreds of pairs
+        out = out if keep_est else out.repartition("id_b")
+        out = out.dropDuplicates(["id_a", "id_b"])
+    return out
+
+
+def _lsh_pairs(
+    df: DataFrame,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    k: int,
+    text_col: str,
+    id_col: str,
+    verify: str,
+    canonicalize: bool,
+    max_bucket: int | None,
+    block_col: str | None,
+) -> DataFrame:
+    """The signature -> LSH candidates -> verify pipeline shared by
+    minhash_lsh_pairs and ngram_jaccard_pairs."""
+    keep = [id_col] + ([block_col] if block_col else [])
+    if canonicalize:
+        df = canonicalize_exact(df, text_col, id_col, carry=tuple(keep[1:]))
+    df = _ensure_parallel(df)
+    # shingling happens INSIDE the signature/verify UDF batches — only the
+    # ~300-byte text (not a ~len(text)-element shingle array) is carried,
+    # and no interpreted transform/substring lambdas run per row.
+    # localCheckpoint cuts the lineage so the minhash work runs ONCE, not
+    # once per downstream branch (candidates + each attach side); the
+    # materialized blocks are GC-cleaned with the plan — no persist leak
+    txt = df.select(*keep, F.col(text_col).alias("_txt")).localCheckpoint(
+        eager=False
+    )
+    sig = (
+        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
+        .filter(F.col("_sig").isNotNull())
+        .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
+        .localCheckpoint(eager=False)
+    )
+    # block_col joins the LSH bucket key: cross-block pairs never form, so
+    # the est prefilter / text attach / exact verify all run on same-block
+    # volume only (r8 measurement: 75% of global candidates were cross-lang)
+    cand = _lsh_candidates(
+        sig.select(*keep, "_sig"), id_col, num_hashes, bands, max_bucket,
+        block_col=block_col, dedup=False,
+    )
+    if verify != "exact":
+        return _est_prefilter(
+            cand, sig, id_col, threshold, num_hashes, cand_raw=True, keep_est=True
+        )
+    cand = _est_prefilter(cand, sig, id_col, threshold, num_hashes, cand_raw=True)
+    return _exact_verify(cand, txt, id_col, k, threshold)
 
 
 def minhash_lsh_pairs(
@@ -1020,55 +977,9 @@ def minhash_lsh_pairs(
     10^6 (pairs among identical docs are exact_dedup's O(cluster) output,
     not emitted here). max_bucket drops residual degenerate buckets — see
     _bucket_guard."""
-    if canonicalize:
-        df = canonicalize_exact(df, text_col, id_col)
-    df = _ensure_parallel(df)
-    # shingling happens INSIDE the signature/verify UDF batches — only the
-    # ~300-byte text (not a ~len(text)-element shingle array) is carried,
-    # and no interpreted transform/substring lambdas run per row.
-    # localCheckpoint cuts the lineage so the minhash work runs ONCE, not
-    # once per downstream branch (candidates + each attach side); the
-    # materialized blocks are GC-cleaned with the plan — no persist leak
-    txt = df.select(F.col(id_col), F.col(text_col).alias("_txt")).localCheckpoint(
-        eager=False
-    )
-    sig = (
-        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
-        .filter(F.col("_sig").isNotNull())
-        .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
-        .localCheckpoint(eager=False)
-    )
-    cand = _lsh_candidates(
-        sig.select(id_col, "_sig"), id_col, num_hashes, bands, max_bucket,
-        dedup=False,
-    )
-
-    if verify == "exact":
-        cand = _est_prefilter(
-            cand, sig, id_col, threshold, num_hashes, cand_raw=True
-        )
-        return _exact_verify(cand, txt, id_col, k, threshold)
-    bc = _collect_sig_table(sig, id_col, num_hashes)
-    if bc is not None:
-        est = _est_match_frac_gather_udf(bc, num_hashes).asNondeterministic()(
-            F.col("id_a"), F.col("id_b")
-        )
-        # est is identical for every multi-band copy of a pair: filter the
-        # raw stream, dedupe the survivors (set-identical, smaller exchange)
-        return (
-            cand.select("id_a", "id_b", est.alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold)
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    sigs = sig.select(id_col, "_sigb")
-    cand = _attach(cand, sigs, id_col, "id_a")
-    cand = _attach(cand, sigs, id_col, "id_b")
-    est = _sig_match_frac_bin_udf(num_hashes)(
-        F.col("_sigb_id_a"), F.col("_sigb_id_b")
-    )
-    return cand.select("id_a", "id_b", est.alias("est_jaccard")).filter(
-        F.col("est_jaccard") >= threshold
+    return _lsh_pairs(
+        df, threshold, num_hashes, bands, k, text_col, id_col, verify,
+        canonicalize, max_bucket, block_col=None,
     )
 
 
@@ -1098,31 +1009,10 @@ def ngram_jaccard_pairs(
     (if set) additionally restricts pairs to equal block values (e.g.
     same-language dedup). canonicalize/max_bucket: duplicate-cluster safety,
     see minhash_lsh_pairs."""
-    if canonicalize:
-        df = canonicalize_exact(
-            df, text_col, id_col, carry=(block_col,) if block_col else ()
-        )
-    df = _ensure_parallel(df)
-    keep = [id_col] + ([block_col] if block_col else [])
-    txt = df.select(*keep, F.col(text_col).alias("_txt")).localCheckpoint(
-        eager=False
+    return _lsh_pairs(
+        df, threshold, num_hashes, bands, k, text_col, id_col, "exact",
+        canonicalize, max_bucket, block_col,
     )
-    sig = (
-        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
-        .filter(F.col("_sig").isNotNull())
-        .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
-        .localCheckpoint(eager=False)
-    )
-    # block_col joins the LSH bucket key: cross-block pairs never form, so
-    # the est prefilter / text attach / exact verify all run on same-block
-    # volume only (r8 measurement: 75% of global candidates were cross-lang)
-    cand = _lsh_candidates(
-        sig.select(id_col, "_sig", *([block_col] if block_col else [])),
-        id_col, num_hashes, bands, max_bucket, block_col=block_col,
-        dedup=False,
-    )
-    cand = _est_prefilter(cand, sig, id_col, threshold, num_hashes, cand_raw=True)
-    return _exact_verify(cand, txt, id_col, k, threshold)
 
 
 # ------------------------------------------------------------------ SimHash
@@ -1160,29 +1050,6 @@ def simhash_from_hashes(hash_arr, bits: int = SIMHASH_BITS):
 def simhash_col(text_col, bits: int = SIMHASH_BITS):
     """Convenience: text -> simhash in one Column (hashes computed inline)."""
     return simhash_from_hashes(token_hashes_col(text_col), bits)
-
-
-def _simhash_udf(bits: int = SIMHASH_BITS):
-    """token-hash array -> signature via numpy (per-doc tiles). Pure integer
-    math — BIT-IDENTICAL to simhash_from_hashes, but one Arrow pass instead
-    of `bits` interpreted aggregate-lambdas per row (the hot path for
-    simhash_pairs; the Column form remains the SQL-mirrorable definition)."""
-    from pyspark.sql.types import LongType
-
-    shifts = np.arange(bits, dtype=np.int64)
-
-    def f(harrs):  # no hints (local-import annotations trap)
-        out = np.full(len(harrs), 0, dtype=np.int64)
-        for i, h in enumerate(harrs):
-            if h is None or len(h) == 0:
-                continue
-            hv = np.asarray(h, dtype=np.int64)
-            bitm = (hv[:, None] >> shifts) & 1  # (tokens, bits)
-            contrib = bitm.sum(axis=0) * 2 - len(hv)  # sum of +-1 per bit
-            out[i] = int(((contrib > 0).astype(np.int64) << shifts).sum())
-        return pd.Series(out)
-
-    return F.pandas_udf(f, LongType())
 
 
 def _simhash_text_udf(bits: int = SIMHASH_BITS):
@@ -1345,10 +1212,12 @@ def embedding_cosine_pairs(
     thr = float(threshold)
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        # null ids pair with nothing and a duplicated id never pairs with
+        # itself — the a.id < b.id rule of a bucket self-join
+        pdf = pdf[pdf[id_col].notna()].sort_values(id_col, kind="mergesort")
         m = len(pdf)
         if m < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        pdf = pdf.sort_values(id_col, kind="mergesort")
         ids = pdf[id_col].to_numpy()
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
         norms = np.linalg.norm(V, axis=1)
@@ -1369,6 +1238,7 @@ def embedding_cosine_pairs(
                 )
                 cos = (V[iu] * V[ju]).sum(axis=1) / (norms[iu] * norms[ju])
                 keep = cos >= thr
+                keep[keep] = ids[iu[keep]] != ids[ju[keep]]
                 if keep.any():
                     out_a.append(ids[iu[keep]])
                     out_b.append(ids[ju[keep]])

@@ -20,13 +20,12 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.operators.dedup import (
     _lsh_candidates,
-    _minhash_udf,
+    _minhash_text_udf,
     canonicalize_exact,
     dedup_components,
     exact_canonical_map,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    shingles_col,
     simhash_pairs,
 )
 
@@ -63,10 +62,9 @@ def test_candidate_pairs_o_of_cluster_post_canonicalization(spark, planted):
     O(distinct texts), not O(cluster^2) — 10k identical docs would otherwise
     emit ~50M candidate pairs."""
     canon = canonicalize_exact(planted)
-    mh = _minhash_udf(128)
     sig = canon.select(
-        "doc_id", shingles_col(F.col("text"), 3).alias("_sh")
-    ).withColumn("_sig", mh(F.col("_sh")))
+        "doc_id", _minhash_text_udf(128, 3)(F.col("text")).alias("_sig")
+    )
     n_cand = _lsh_candidates(sig.select("doc_id", "_sig"), "doc_id", 128, 16).count()
     # 22 distinct texts -> at most 22*21/2 = 231 pairs even if every band
     # collided; in practice only the near-dup pair collides

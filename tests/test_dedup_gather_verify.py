@@ -1,12 +1,15 @@
 """r9 gather-side verification parity: the broadcast-gather est/verify path
 (default below the size cap) must emit EXACTLY the same pairs and values as
 the attach-join path (the above-cap 100TB fallback) — forced here by setting
-the gather cap to zero bytes."""
+the gather cap to zero bytes. Both paths call the same Jaccard kernel, so
+every emitted Jaccard is also checked against an independent driver-side
+reference: Python set math over _shingle_set."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from geomesa_spark.operators.dedup import (
+    _shingle_set,
     embedding_cosine_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -23,6 +26,15 @@ def _rows(df, cols):
 @pytest.fixture()
 def texts(spark):
     return synth_texts(spark, 3000, partitions=8).localCheckpoint()
+
+
+def _assert_set_math(rows, df, k=3):
+    """Each (id_a, id_b, jaccard) equals len(sa & sb) / len(sa | sb) over
+    the pair's distinct k-shingle sets, bit for bit."""
+    text = {r["doc_id"]: r["text"] for r in df.collect()}
+    for a, b, jac in rows:
+        sa, sb = _shingle_set(text[a], k), _shingle_set(text[b], k)
+        assert jac == len(sa & sb) / len(sa | sb), (a, b)
 
 
 def _with_cap(spark, cap, fn):
@@ -53,6 +65,8 @@ def test_minhash_exact_gather_matches_attach(spark, texts):
     )
     assert len(gather) >= 3000 // 20 - 2  # planted near-dups all found
     assert gather == attach  # identical pairs AND identical jaccard doubles
+    _assert_set_math(gather, texts)
+    _assert_set_math(attach, texts)
 
 
 def test_minhash_est_gather_matches_attach(spark, texts):
@@ -79,12 +93,15 @@ def test_ngram_gather_matches_attach(spark, texts):
         ),
     )
     assert gather and gather == attach
+    _assert_set_math(gather, texts)
+    _assert_set_math(attach, texts)
 
 
 def test_jaccard_gather_nul_and_short_texts(spark):
     """NUL-bearing texts force the object-dtype shingle arrays (U-dtype
     would merge 'ab\\0' with 'ab'); shorter-than-k texts shingle to the
-    whole text. Both must agree with the attach path exactly."""
+    whole text; non-ASCII text shingles by character. All must agree with
+    the attach path exactly."""
     rows = [
         ("a1", "ab\x00cd ab\x00ce", "en"),
         ("a2", "ab\x00cd ab\x00cf", "en"),
@@ -92,6 +109,8 @@ def test_jaccard_gather_nul_and_short_texts(spark):
         ("b2", "ab", "en"),
         ("c1", "abcd abce xyz", "en"),
         ("c2", "abcd abce xyw", "en"),
+        ("e1", "Straße café", "en"),
+        ("e2", "Straße cafés", "en"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
     cols = ["id_a", "id_b", "jaccard"]
@@ -102,6 +121,32 @@ def test_jaccard_gather_nul_and_short_texts(spark):
         lambda: _rows(minhash_lsh_pairs(df, threshold=0.3, verify="exact"), cols),
     )
     assert gather == attach
+    assert ("e1", "e2") in {(a, b) for a, b, _ in gather}
+    _assert_set_math(gather, df)
+    _assert_set_math(attach, df)
+
+
+def test_gather_budgets_text_in_utf8_bytes(spark):
+    """The gather cap counts UTF-8 bytes, not characters: a cap between the
+    two sums refuses a non-ASCII text table (it falls back to attach)."""
+    from geomesa_spark.operators.dedup import _gather_table
+
+    texts = ["Straße café", "日本語のテキスト", "ascii only"]
+    df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "_txt"])
+    n_chars = sum(len(t) for t in texts)
+    n_bytes = sum(len(t.encode("utf-8")) for t in texts)
+    assert n_chars < n_bytes
+
+    def gather(cap):
+        return _with_cap(
+            spark,
+            str(64 * len(texts) + cap),
+            lambda: _gather_table(df, "doc_id", "_txt", lambda s: s.to_numpy()),
+        )
+
+    assert gather(n_bytes) is not None
+    assert gather(n_chars) is None
+    assert gather(n_bytes - 1) is None
 
 
 def test_embedding_bucket_kernel_matches_join_reference(spark):
@@ -146,6 +191,23 @@ def test_embedding_bucket_kernel_matches_join_reference(spark):
         ["id_a", "id_b", "cosine"],
     )
     assert new and new == ref
+
+
+def test_embedding_pairs_skip_self_and_null_ids(spark):
+    """A duplicated id never pairs with itself and a null id pairs with
+    nothing, as under the a.id < b.id rule of a bucket self-join."""
+    rows = [
+        ("v1", [1.0, 0.0, 0.0]),
+        ("v1", [1.0, 0.01, 0.0]),
+        ("v2", [1.0, 0.0, 0.01]),
+        (None, [1.0, 0.01, 0.01]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    out = _rows(
+        embedding_cosine_pairs(df, threshold=0.9, lsh_bits=2, tables=2),
+        ["id_a", "id_b"],
+    )
+    assert out == [("v1", "v2")]
 
 
 def test_components_local_union_find_matches_distributed(spark):
