@@ -201,7 +201,7 @@ def q_xz2_extent_query(spark, sf_dir):
     _init(spark)
     from pyspark.sql.types import LongType
 
-    from geomesa_spark.index.xz2 import XZ2SFC, xz2_index_many
+    from geomesa_spark.index.xz import XZ2SFC, xz2_index_many
 
     sfc = XZ2SFC(g=12)
 
@@ -242,7 +242,7 @@ def q_xz3_extent_temporal(spark, sf_dir):
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from geomesa_spark.index.xz3 import xz3_index_many
+    from geomesa_spark.index.xz import xz3_index_many
     from geomesa_spark.plans.planner import xz3_predicate
 
     polys = _part_polys(spark, sf_dir).withColumn(

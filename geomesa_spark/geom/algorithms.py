@@ -725,10 +725,6 @@ def covers(a: Geometry, b: Geometry) -> bool:
     )
 
 
-def covered_by(a, b) -> bool:
-    return covers(b, a)
-
-
 def touches(a: Geometry, b: Geometry) -> bool:
     m = relate(a, b)
     return m[0] == "F" and (m[1] != "F" or m[3] != "F" or m[4] != "F")

@@ -1,14 +1,14 @@
-"""Space-filling-curve cell indexing: Z2/Z3 (points), XZ2 (extents),
+"""Space-filling-curve cell indexing: Z2/Z3 (points), XZ2/XZ3 (extents),
 geohash, slippy tiles, and query-range decomposition.
 
-The reference's Z2/Z3/XZ2 key math (geomesa-z3) reimagined as vectorized
+The reference's Z2/Z3/XZ2/XZ3 key math (geomesa-z3) reimagined as vectorized
 numpy encoders producing LongType columns, plus driver-side pure-Python
 range decomposition whose output becomes partition-prunable predicates."""
 
 from .geohash import geohash_decode_bbox, geohash_decode_point, geohash_encode
 from .ranges import IndexRange, merge_ranges, zranges_box, zranges_lonlat
 from .tiles import GridSnap, lonlat_to_tile, tile_bounds, tile_key
-from .xz2 import XZ2SFC
+from .xz import XZ2SFC, XZ3SFC
 from .zorder import (
     WORLD,
     Z2_BITS,
@@ -31,6 +31,7 @@ __all__ = [
     "zranges_box",
     "zranges_lonlat",
     "XZ2SFC",
+    "XZ3SFC",
     "GridSnap",
     "lonlat_to_tile",
     "tile_bounds",

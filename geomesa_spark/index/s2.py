@@ -200,7 +200,7 @@ def s3_index(lon, lat, tsec, level: int = MAX_LEVEL):
     (s3/S3IndexKeySpace.scala:79-97: time bin prefix + S2 cell id). For
     POINT data the (bin, cell) composition is exact — unlike extents, a
     point belongs to exactly one bin and one cell, so pruning on both
-    columns is sound (the extent case needs XZ3, see index/xz3.py)."""
+    columns is sound (the extent case needs XZ3, see index/xz.py)."""
     from .zorder import SECONDS_PER
 
     per = SECONDS_PER["week"]

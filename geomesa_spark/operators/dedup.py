@@ -26,6 +26,8 @@ Scale notes (the three round-1 anti-patterns, fixed):
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -33,6 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 SIMHASH_BITS = 60  # md5-derived 60-bit signatures (15 hex chars -> ANSI-safe long)
+
+
+# a shuffle repartition node as a line of a logical plan's tree string
+# (unresolved nodes carry a leading '); coalesce renders as
+# `Repartition n, false` and a column alias never starts a line
+_SHUFFLE_NODE = re.compile(r"^[ :+-]*'?(?:Repartition \d+, true|RepartitionByExpression )", re.M)
 
 
 def _ensure_parallel(df: DataFrame) -> DataFrame:
@@ -49,10 +57,10 @@ def _ensure_parallel(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
-        # already explicitly repartitioned somewhere in the plan (e.g. an
+        # already shuffled into partitions somewhere in the plan (e.g. an
         # upstream _ensure_parallel): inputFiles() would still report the
         # few-file scan and a second exchange would be pure waste
-        if "Repartition" in df._jdf.queryExecution().logical().toString():
+        if _SHUFFLE_NODE.search(df._jdf.queryExecution().logical().toString()):
             return df
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         per_core = _parse_bytes(
@@ -80,24 +88,11 @@ def _parse_bytes(v: str) -> int:
     return int(float(s) * mult)
 
 
-def shingles_col(text_col, k: int = 3):
-    """Distinct lowercase character k-shingles as a Column. NOTE: transform/
-    substring lambdas are INTERPRETED per element by Spark — this is the
-    SQL-mirrorable definition; the dedup hot paths shingle inside Arrow
-    batches instead (_minhash_text_udf / _jaccard compute the identical
-    distinct-k-gram sets in numpy/Python per batch)."""
-    t = F.lower(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))),
-            lambda i: F.substring(t, i, k),
-        )
-    )
-
-
 def _shingle_set(t: str, k: int) -> set:
-    """Python mirror of shingles_col: distinct k-grams of lower(t); texts
-    shorter than k yield the whole text (one shingle)."""
+    """The one shingle definition: distinct character k-grams of lower(t);
+    texts shorter than k yield the whole text (one shingle). The minhash and
+    Jaccard kernels shingle with it, and tests use its set math as the
+    reference."""
     t = t.lower()
     n = max(len(t) - k + 1, 1)
     return {t[i : i + k] for i in range(n)}
@@ -105,8 +100,8 @@ def _shingle_set(t: str, k: int) -> set:
 
 def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
     """text -> minhash signature with the shingling INSIDE the Arrow batch
-    (one Python pass per doc; the grams are shingles_col's, without its
-    ~len(text) interpreted lambda evals per row). Each gram's first 8 UTF-8
+    (one Python pass per doc over _shingle_set's grams, not ~len(text)
+    interpreted Spark lambda evals per row). Each gram's first 8 UTF-8
     bytes pack into a uint64 folded to 31 bits; the hash family is
     h_i(x) = (a_i*x + b_i) mod (2^31-1) with a,b,x < 2^31, so products stay
     inside uint64 — no object math."""

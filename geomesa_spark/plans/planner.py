@@ -400,7 +400,7 @@ def xz3_predicate(
     Over-selects, never misses; combine with the envelope + ts compare."""
     import pandas as pd
 
-    from ..index.xz3 import XZ3SFC
+    from ..index.xz import XZ3SFC
     from ..index.zorder import SECONDS_PER
 
     if not bboxes or interval is None:

@@ -52,7 +52,6 @@ from pyspark.sql.types import (
 
 from ..geom.wkt import from_wkt
 from ..geom.wkb import to_wkb
-from ..index.xz2 import XZ2SFC
 from ..index.zorder import WORLD, Z2_BITS, interleave2, normalize, z2_index, z3_index
 
 SPAN_TYPE = ArrayType(
@@ -281,8 +280,7 @@ def _index_batch(wkts: pd.Series, ts_seconds: np.ndarray, xz2_g: int, cell_bits:
     xz2 = np.full(n, -1, dtype=np.int64)
     xz3 = np.full(n, -1, dtype=np.int64)
     if ok.any():
-        from ..index.xz2 import xz2_index_many
-        from ..index.xz3 import xz3_index_many
+        from ..index.xz import xz2_index_many, xz3_index_many
 
         xz2[ok] = xz2_index_many(minx[ok], miny[ok], maxx[ok], maxy[ok], g=xz2_g)
         # true 3-D XZ code (week-binned time axis) — extents + time pushdown

@@ -122,6 +122,21 @@ def test_xz2_disjoint_mostly_excluded():
     assert hits <= 1
 
 
+def test_xz2_vectorized_matches_scalar():
+    from geomesa_spark.index.xz import xz2_index_many
+
+    rng = np.random.default_rng(11)
+    n = 400
+    minx = rng.uniform(-185, 178, n)
+    miny = rng.uniform(-95, 88, n)
+    # zero, tiny, cell-sized and continent-sized extents; some leave the bounds
+    size = rng.choice([0.0, 1e-5, 0.03, 1.0, 40.0], n) * rng.uniform(0, 1, n)
+    maxx = minx + size
+    maxy = miny + size * rng.uniform(0.2, 2.0, n)
+    codes = xz2_index_many(minx, miny, maxx, maxy, g=12)
+    assert codes.tolist() == [XZ.index(*e) for e in zip(minx, miny, maxx, maxy)]
+
+
 def test_xz2_point_extent():
     code = XZ.index(5.0, 5.0, 5.0, 5.0)
     assert _covers(code, [(4, 4, 6, 6)])
@@ -207,7 +222,7 @@ def test_geohash_roundtrip_many():
 def test_xz2_tight_budget_never_abandons_frontier(max_ranges):
     """Every stored element intersecting the window must fall in SOME range,
     no matter how small the budget (budget trades precision, not recall)."""
-    from geomesa_spark.index.xz2 import XZ2SFC
+    from geomesa_spark.index.xz import XZ2SFC
 
     sfc = XZ2SFC(g=12)
     window = (-40.0, -20.0, 10.0, 25.0)

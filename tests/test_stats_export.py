@@ -185,6 +185,55 @@ def test_route_and_tube(spark):
     assert tube.count() >= 0
 
 
+def test_hash_attribute_buckets(spark):
+    from geomesa_spark.operators.processes import hash_attribute
+
+    vals = ["a", "b", "a", "c", None, "b", "zz", "a"]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "id INT, v STRING")
+    rows = hash_attribute(df, "v", 5).orderBy("id").collect()
+    got = [r.hash_bucket for r in rows]
+    assert all(0 <= b < 5 for b in got)
+    bucket_of = {}
+    for v, b in zip(vals, got):
+        assert bucket_of.setdefault(v, b) == b, v
+
+
+def test_min_max_matches_python(spark):
+    from geomesa_spark.operators.processes import min_max
+
+    vals = [3.5, None, -2.0, 11.25, None, 0.0]
+    df = spark.createDataFrame([(v,) for v in vals], "v DOUBLE")
+    r = min_max(df, "v").collect()[0]
+    present = [v for v in vals if v is not None]
+    assert (r.min_value, r.max_value, r["count"]) == (min(present), max(present), len(vals))
+
+
+def test_text_profile_is_its_parts(spark):
+    from geomesa_spark.operators.textstats import (
+        fingerprint_udf,
+        lang_id_col,
+        quality_cols,
+        text_profile,
+        token_count_col,
+    )
+
+    texts = ["the cat and the dog", "der Hund und ein Fisch schwimmt", None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id INT, text STRING")
+    t = F.col("text")
+    want = (
+        quality_cols(df)
+        .withColumn("token_count_bpe", token_count_col(t))
+        .withColumn("lang_guess", lang_id_col(t))
+        .withColumn("fingerprint", fingerprint_udf()(t))
+    )
+    got = text_profile(df)
+    assert got.columns == want.columns
+    assert got.orderBy("id").collect() == want.orderBy("id").collect()
+    first = got.orderBy("id").first()
+    # 5 tokens, 3 of them stopwords ("the", "and", "the"); English trigrams win
+    assert (first.n_tokens, first.stopword_ratio, first.lang_guess) == (5, 0.6, "en")
+
+
 def test_stat_z3_variants(spark):
     from geomesa_spark.operators.stats import stat
     from geomesa_spark.sources.docs import index_docs, synth_docs

@@ -5,7 +5,7 @@ parity, and the planner (week_bin, xz3) pushdown end-to-end."""
 import numpy as np
 import pytest
 
-from geomesa_spark.index.xz3 import XZ3SFC, xz3_index_many
+from geomesa_spark.index.xz import XZ3SFC, xz3_index_many
 from geomesa_spark.index.zorder import SECONDS_PER
 
 WEEK = SECONDS_PER["week"]
@@ -99,6 +99,18 @@ def test_xz3_vectorized_matches_scalar():
         tin = ts[i] - (ts[i] // WEEK) * WEEK
         assert wb[i] == int(ts[i] // WEEK)
         assert codes[i] == XZ.index(minx[i], miny[i], tin, maxx[i], maxy[i], tin)
+
+
+def test_xz3_index_many_matches_scalar_on_intervals():
+    """The batch encoder over non-degenerate time intervals, including ones
+    that leave the week bin on either side (clamped)."""
+    rng = np.random.default_rng(13)
+    n = 300
+    lo = np.stack([rng.uniform(-175, 170, n), rng.uniform(-85, 80, n), rng.uniform(-3600, WEEK, n)])
+    span = rng.choice([0.0, 1e-4, 0.5, 5.0], n) * rng.uniform(0, 1, n)
+    hi = lo + np.stack([span, span * 0.5, rng.choice([0.0, 60.0, 86400.0, 3 * 86400.0], n)])
+    codes = XZ.index_many(lo, hi)
+    assert codes.tolist() == [XZ.index(*lo[:, i], *hi[:, i]) for i in range(n)]
 
 
 def test_xz3_pushdown_end_to_end(spark):
